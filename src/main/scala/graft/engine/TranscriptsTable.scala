@@ -2,9 +2,11 @@ package graft.engine
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.gen.TranscriptGen
+import graft.model.Turn
 
 /** Iceberg-shaped table layer over plain Parquet (no Iceberg runtime in
   * this environment — SURVEY.md §7). Emulates:
@@ -119,12 +121,21 @@ object TranscriptsTable {
     ref
   }
 
+  /** The table's data columns: [[Turn]]'s, nullable as a parquet read
+    * reports them. Reads pass it instead of inferring it: inference reads
+    * the files' footers in a Spark job of its own, one more job per
+    * snapshot read. The `bucket` (and, in [[readAll]], `snapshot`)
+    * partition columns still come from the directory names.
+    */
+  val Schema: StructType =
+    StructType(Encoders.product[Turn].schema.map(_.copy(nullable = true)))
+
   /** Read one snapshot (bucket partition column dropped — it's layout,
     * not data).
     */
   def readSnapshot(spark: SparkSession, snap: SnapshotRef): DataFrame =
-    spark.read.parquet(snap.path)
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    spark.read.schema(Schema).parquet(snap.path)
+      .select(Schema.fieldNames.toSeq.map(col): _*)
 
   /** Read every registered snapshot as one DataFrame. basePath makes the
     * sibling `snapshot=N` roots legal partition directories of one table —
@@ -135,8 +146,8 @@ object TranscriptsTable {
   def readAll(spark: SparkSession, baseDir: String): DataFrame = {
     val snaps = readManifest(baseDir)
     require(snaps.nonEmpty, s"no snapshots registered under $baseDir")
-    spark.read.option("basePath", baseDir).parquet(snaps.map(_.path): _*)
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    spark.read.schema(Schema).option("basePath", baseDir).parquet(snaps.map(_.path): _*)
+      .select(Schema.fieldNames.toSeq.map(col): _*)
   }
 
 }

@@ -1,6 +1,6 @@
 package graft.extract
 
-import java.util.regex.Pattern
+import java.util.regex.{Matcher, Pattern}
 import graft.model.{ExtractedTurn, Section}
 
 /** Pure extraction core — zero Spark dependencies.
@@ -21,6 +21,15 @@ import graft.model.{ExtractedTurn, Section}
   *  - confidence: finalcodes/Facesheet.py:177-184 (A1) and
   *    SignedAgreementFinalDB:180-206 (A2)
   *  - merge precedence (pattern beats anchor): SignedAgreementFinalDB:237-261
+  *
+  * Per-turn cost is linear in the text. Two invariants keep it so without
+  * changing any output:
+  *  - leading literals: every field-bank pattern is declared with the
+  *    lowercase literal(s) each of its matches must begin with, and its
+  *    search starts at the earliest occurrence of one in the turn's
+  *    lowercase copy (see "Regex field banks");
+  *  - the HTML block decomposition ([[textBlocks]]) is a set of forward
+  *    scans with the exact semantics of the regex cascade it replaced.
   */
 object Extract {
 
@@ -50,33 +59,30 @@ object Extract {
   // Boilerplate strip for HTML payloads — Boilerpipe/Trafilatura-style
   // text-density / link-density block classifier (north rule). For
   // non-HTML text this is the identity.
+  //
+  // The block decomposition is a set of left-to-right scans that reproduce
+  // the regex forms below exactly (Java regex semantics, ASCII case folding,
+  // `\b` included). Run as regexes, the lazy forms rescan to the end of the
+  // payload from every unclosed opener, quadratic in a page of unclosed
+  // `<nav>`s; the scans only search forward, so they stay linear.
+  //   script/style:  (?is)<(script|style)\b[^>]*>.*?</\1>              -> " "
+  //   chrome:        (?is)<(head|nav|aside|footer|header)\b[^>]*>.*?</\1> -> " "
+  //   block split:   (?is)</?(?:div|p|nav|footer|header|ul|ol|li|table|tr|
+  //                  h[1-6]|br|body|html|section|article|aside)[^>]*>
+  //   link text:     (?is)<a\b[^>]*>(.*?)</a>
+  //   tag strip:     (?is)<[^>]*> -> " ", then \s+ -> " ", then trim
   // -------------------------------------------------------------------------
-  private val tagPattern = Pattern.compile("(?is)<[^>]*>")
-  private val anchorPattern = Pattern.compile("(?is)<a\\b[^>]*>(.*?)</a>")
-  private val blockSplitters =
-    Pattern.compile("(?is)</?(?:div|p|nav|footer|header|ul|ol|li|table|tr|h[1-6]|br|body|html|section|article|aside)[^>]*>")
-  private val scriptStyle =
-    Pattern.compile("(?is)<(script|style)\\b[^>]*>.*?</\\1>")
-  // Structural chrome pruning (Trafilatura-style): whole <nav>/<aside>/
-  // <footer>/<header>/<head> subtrees are boilerplate by POSITION, not by
-  // their text features — a nav bar of plain words passes any density
-  // test yet is never main content. Non-greedy, so a same-tag nested
-  // subtree degrades to partial pruning (heuristic, documented); an
-  // unclosed tag leaves the subtree to the density classifier.
-  private val pruneSubtrees =
-    Pattern.compile("(?is)<(head|nav|aside|footer|header)\\b[^>]*>.*?</\\1>")
-
-  def isHtml(text: String): Boolean =
-    text.contains("<html") || text.contains("<body") || text.contains("<div") ||
-      text.contains("<p>") || text.contains("</a>")
-
-  // hoisted: String.replaceAll/split compile their pattern on EVERY call,
-  // and stripTags runs once per anchor plus once per block of every HTML
-  // turn (~17% of the generator mix) — measured 52 us per HTML turn before
-  private val wsRun = Pattern.compile("\\s+")
-
-  private def stripTags(s: String): String =
-    wsRun.matcher(tagPattern.matcher(s).replaceAll(" ")).replaceAll(" ").trim
+  /** The text contains "<html", "<body", "<div", "<p>" or "</a>". */
+  def isHtml(text: String): Boolean = {
+    var i = text.indexOf('<')
+    while (i >= 0) {
+      if (text.startsWith("html", i + 1) || text.startsWith("body", i + 1) ||
+          text.startsWith("div", i + 1) || text.startsWith("p>", i + 1) ||
+          text.startsWith("/a>", i + 1)) return true
+      i = text.indexOf('<', i + 1)
+    }
+    false
+  }
 
   /** One flat-text block of an HTML page with its shallow text features
     * (Kohlschütter et al., WSDM 2010: word count + link density are the
@@ -91,21 +97,237 @@ object Extract {
     * tags, strip remaining inline tags, collapse whitespace; per block
     * compute word count and link density (chars inside <a> / total text
     * chars of the block).
+    *
+    * Structural chrome pruning (Trafilatura-style): whole <nav>/<aside>/
+    * <footer>/<header>/<head> subtrees are boilerplate by POSITION, not by
+    * their text features — a nav bar of plain words passes any density
+    * test yet is never main content. A subtree ends at the first closer of
+    * its tag, so a same-tag nested subtree degrades to partial pruning
+    * (heuristic, documented); an unclosed tag leaves the subtree to the
+    * density classifier.
     */
   def textBlocks(html: String): Vector[TextBlock] = {
-    val noScript = scriptStyle.matcher(html).replaceAll(" ")
-    val noChrome = pruneSubtrees.matcher(noScript).replaceAll(" ")
-    blockSplitters.split(noChrome).toVector.flatMap { raw =>
-      val m = anchorPattern.matcher(raw)
-      var linkChars = 0
-      while (m.find()) linkChars += stripTags(m.group(1)).length
-      val txt = stripTags(raw)
-      if (txt.isEmpty) None
+    val s = pruneSubtrees(pruneSubtrees(html.toCharArray, ScriptStyle), ChromeTags)
+    val buf = new Array[Char](s.length) // tag-strip output, reused per block
+    val out = Vector.newBuilder[TextBlock]
+    var from = 0 // start of the current block
+    var i = indexOf(s, '<', 0)
+    while (i >= 0) {
+      if (blockTagAt(s, i + 1)) {
+        val gt = indexOf(s, '>', i + 1)
+        if (gt < 0) i = -1 // no '>' left: no later block tag can close
+        else {
+          addBlock(s, from, i, buf, out)
+          from = gt + 1
+          i = indexOf(s, '<', from)
+        }
+      } else i = indexOf(s, '<', i + 1)
+    }
+    addBlock(s, from, s.length, buf, out)
+    out.result()
+  }
+
+  private val ScriptStyle = Array("script", "style")
+  // the regexes' alternation order; with the \b after a name, at most one
+  // name fits at a '<' ("head" fails its \b in "<header")
+  private val ChromeTags = Array("head", "nav", "aside", "footer", "header")
+
+  private def indexOf(s: Array[Char], c: Char, from: Int): Int = {
+    var i = from
+    while (i < s.length) {
+      if (s(i) == c) return i
+      i += 1
+    }
+    -1
+  }
+
+  /** Java's CASE_INSENSITIVE folding without UNICODE_CASE: ASCII only. */
+  private def lower(c: Char): Char = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+
+  /** `s` holds the lowercase ASCII literal `lit` at `at`, ASCII case folded. */
+  private def ciAt(s: Array[Char], at: Int, lit: String): Boolean = {
+    if (at < 0 || at + lit.length > s.length) return false
+    var k = 0
+    while (k < lit.length) {
+      if (lower(s(at + k)) != lit.charAt(k)) return false
+      k += 1
+    }
+    true
+  }
+
+  private val wordBoundary = Pattern.compile("\\b")
+
+  /** Java's `\b` at `i` of `s` right after a tag name's last letter, with
+    * the input ending at `end`. ASCII is decided here; any other character
+    * goes to the regex engine, whose notion of a word character (letters
+    * and digits, non-spacing marks) differs across JDK versions.
+    */
+  private def boundaryAfterName(s: Array[Char], i: Int, end: Int): Boolean =
+    if (i >= end) true
+    else {
+      val c = s(i)
+      if (c < 0x80) !(c == '_' || (c >= '0' && c <= '9') || (lower(c) >= 'a' && lower(c) <= 'z'))
+      else wordBoundary.matcher(java.nio.CharBuffer.wrap(s)).region(i, end)
+        .useTransparentBounds(true).lookingAt()
+    }
+
+  /** `s` with every `<name\b[^>]*>.*?</name>` subtree (names tried in
+    * order, ASCII case folded) replaced by one space, scanning left to right
+    * like `replaceAll`. Linear: the next '>' and each name's next closer are
+    * searched forward only, and a name with no closer left is never searched
+    * again.
+    */
+  private def pruneSubtrees(s: Array[Char], names: Array[String]): Array[Char] = {
+    val closer = Array.fill(names.length)(-2) // next "</name>" found; -1 none left, -2 unsearched
+    def closerFrom(k: Int, from: Int): Int = {
+      if (closer(k) != -1 && closer(k) < from) {
+        val name = names(k)
+        var c = indexOf(s, '<', from)
+        while (c >= 0 && !(c + 3 + name.length <= s.length && s(c + 1) == '/' &&
+            ciAt(s, c + 2, name) && s(c + 2 + name.length) == '>'))
+          c = indexOf(s, '<', c + 1)
+        closer(k) = c
+      }
+      closer(k)
+    }
+    var out: Array[Char] = null
+    var n = 0 // chars in out
+    var copied = 0 // s(copied until the scan position) is not yet in out
+    var gt = -1 // the last '>' found
+    var i = indexOf(s, '<', 0)
+    while (i >= 0) {
+      val c1 = if (i + 1 < s.length) lower(s(i + 1)) else '<'
+      var k = 0
+      while (k < names.length && !(names(k).charAt(0) == c1 && ciAt(s, i + 1, names(k)) &&
+          boundaryAfterName(s, i + 1 + names(k).length, s.length)))
+        k += 1
+      var next = i + 1
+      if (k < names.length) {
+        val nameEnd = i + 1 + names(k).length
+        if (gt < nameEnd) gt = indexOf(s, '>', nameEnd)
+        if (gt < 0) next = -1 // no '>' left: no later opener can close
+        else {
+          val c = closerFrom(k, gt + 1)
+          if (c >= 0) {
+            if (out == null) out = new Array[Char](s.length)
+            System.arraycopy(s, copied, out, n, i - copied)
+            n += i - copied
+            out(n) = ' '
+            n += 1
+            copied = c + names(k).length + 3
+            next = copied
+          }
+        }
+      }
+      i = if (next < 0) -1 else indexOf(s, '<', next)
+    }
+    if (out == null) s
+    else {
+      System.arraycopy(s, copied, out, n, s.length - copied)
+      java.util.Arrays.copyOf(out, n + s.length - copied)
+    }
+  }
+
+  /** A block-level tag name begins at `at` (after an optional '/'). The
+    * regex has no `\b` here, so any name with such a prefix counts
+    * (`<pre>` splits as `p`).
+    */
+  private def blockTagAt(s: Array[Char], at: Int): Boolean = {
+    val j = if (at < s.length && s(at) == '/') at + 1 else at
+    if (j >= s.length) false
+    else (lower(s(j)): @annotation.switch) match {
+      case 'd' => ciAt(s, j + 1, "iv")
+      case 'p' => true
+      case 'n' => ciAt(s, j + 1, "av")
+      case 'f' => ciAt(s, j + 1, "ooter")
+      case 'h' =>
+        (j + 1 < s.length && s(j + 1) >= '1' && s(j + 1) <= '6') ||
+          ciAt(s, j + 1, "eader") || ciAt(s, j + 1, "tml")
+      case 'u' | 'o' => ciAt(s, j + 1, "l")
+      case 'l' => ciAt(s, j + 1, "i")
+      case 't' => ciAt(s, j + 1, "able") || ciAt(s, j + 1, "r")
+      case 'b' => ciAt(s, j + 1, "r") || ciAt(s, j + 1, "ody")
+      case 's' => ciAt(s, j + 1, "ection")
+      case 'a' => ciAt(s, j + 1, "rticle") || ciAt(s, j + 1, "side")
+      case _ => false
+    }
+  }
+
+  /** The block s(from until to), if any text is left after the tag strip. */
+  private def addBlock(s: Array[Char], from: Int, to: Int, buf: Array[Char],
+      out: scala.collection.mutable.Growable[TextBlock]): Unit = {
+    val n = stripTags(s, from, to, buf)
+    var a = 0 // String.trim: drop every char <= ' ' at both ends
+    var b = n
+    while (a < b && buf(a) <= ' ') a += 1
+    while (b > a && buf(b - 1) <= ' ') b -= 1
+    if (b > a) {
+      // \s runs are single spaces and the ends are trimmed: words = spaces + 1
+      var words = 1
+      var k = a
+      while (k < b) { if (buf(k) == ' ') words += 1; k += 1 }
+      out += TextBlock(new String(buf, a, b - a), words,
+        linkChars(s, from, to, buf).toDouble / (b - a))
+    }
+  }
+
+  /** Tag strip of s(from until to) into buf, before the trim: each
+    * `<[^>]*>` becomes a space and `\s+` runs collapse to one space; returns
+    * the length written. A '>' search never passes the '>' of the block tag
+    * that follows the block.
+    */
+  private def stripTags(s: Array[Char], from: Int, to: Int, buf: Array[Char]): Int = {
+    var n = 0
+    var tags = true // a '>' may still follow in the range
+    var space = false // inside a whitespace run
+    var i = from
+    while (i < to) {
+      val c = s(i)
+      if (c == '<' && tags) {
+        val gt = indexOf(s, '>', i + 1)
+        if (gt >= 0 && gt < to) { space = true; i = gt + 1 }
+        else tags = false // this '<' and every later one is text
+      } else if (isSpace(c)) { space = true; i += 1 }
       else {
-        val words = wsRun.split(txt).count(_.nonEmpty)
-        Some(TextBlock(txt, words, linkChars.toDouble / txt.length))
+        if (space) { buf(n) = ' '; n += 1; space = false }
+        buf(n) = c; n += 1; i += 1
       }
     }
+    n
+  }
+
+  /** Java regex `\s` without UNICODE_CHARACTER_CLASS: [ \t\n\x0B\f\r]. */
+  private def isSpace(c: Char): Boolean =
+    c <= ' ' && (c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r')
+
+  /** Stripped, trimmed text length of every `<a\b[^>]*>(.*?)</a>` in the
+    * block s(from until to); `to` is the end of `s` or a '<', which bounds
+    * every '<' search.
+    */
+  private def linkChars(s: Array[Char], from: Int, to: Int, buf: Array[Char]): Int = {
+    var total = 0
+    var i = indexOf(s, '<', from)
+    while (i >= 0 && i < to) {
+      var next = i + 1
+      if (i + 1 < to && lower(s(i + 1)) == 'a' && boundaryAfterName(s, i + 2, to)) {
+        val gt = indexOf(s, '>', i + 2)
+        var c = if (gt < 0 || gt >= to) -1 else indexOf(s, '<', gt + 1)
+        while (c >= 0 && c < to && !(c + 4 <= to && s(c + 1) == '/' &&
+            lower(s(c + 2)) == 'a' && s(c + 3) == '>'))
+          c = indexOf(s, '<', c + 1)
+        // no '>' or no closer left: no later anchor of the block can match
+        if (c < 0 || c >= to) return total
+        val n = stripTags(s, gt + 1, c, buf)
+        var a = 0
+        var b = n
+        while (a < b && buf(a) <= ' ') a += 1
+        while (b > a && buf(b - 1) <= ' ') b -= 1
+        total += b - a
+        next = c + 4
+      }
+      i = indexOf(s, '<', next)
+    }
+    total
   }
 
   /** Keep blocks whose link density < 0.35 and word count >= 5; join kept
@@ -344,8 +566,64 @@ object Extract {
   // Regex field banks (R1-R11). Compiled once (object init); first match
   // wins; ordered fallback via chains. Pattern result beats KV anchor for
   // the same canonical field (merge precedence, SignedAgreementFinalDB:237-261).
+  //
+  // Leading literals: every bank pattern is declared with the literal(s)
+  // each of its matches must BEGIN with, lowercased. The search for a match
+  // starts at the earliest occurrence of a leading literal in the turn's
+  // lowercase copy (`Matcher.find(from)`), and a pattern whose literals are
+  // all absent is not run. No match can start before the first occurrence
+  // of its leading literal, so the first match found is the one `find()`
+  // from index 0 would find: the literals are a necessary-condition filter,
+  // the regex the exact verification.
   // -------------------------------------------------------------------------
   private def p(re: String) = Pattern.compile(re)
+
+  /** A bank pattern and the literals its every match begins with. For a
+    * case-insensitive pattern the literals are lowercase and are looked up
+    * in `low == text.toLowerCase`; `(?i)` folds ASCII only, so a match
+    * beginning at i puts the literal at i of `low` whenever `low` is as long
+    * as `text` (lowercasing changes the length only for U+0130 `İ`, in the
+    * default locales this code assumes; with a different length the search
+    * starts at `from`). A case-sensitive pattern's literals are looked up in
+    * `text` itself.
+    */
+  private final class Anchored(re: String, leads: Array[String], cased: Boolean) {
+    val pattern: Pattern = Pattern.compile(re)
+
+    /** Where the search for a match at or after `from` starts; -1 when no
+      * match can exist.
+      */
+    def start(text: String, low: String, from: Int): Int = {
+      if (!cased && low.length != text.length) return from
+      val hay = if (cased) text else low
+      var best = -1
+      var k = 0
+      while (k < leads.length) {
+        val j = hay.indexOf(leads(k), from)
+        if (j >= 0 && (best < 0 || j < best)) best = j
+        k += 1
+      }
+      best
+    }
+
+    /** A matcher on the first match starting at or after `from`, or null. */
+    def find(text: String, low: String, from: Int = 0): Matcher = {
+      val at = start(text, low, from)
+      if (at < 0) null
+      else {
+        val m = pattern.matcher(text)
+        if (m.find(at)) m else null
+      }
+    }
+
+    /** Group 1 of that match, as [[firstMatch]] gives it. */
+    def first(text: String, low: String, from: Int = 0): Option[String] = {
+      val m = find(text, low, from)
+      if (m == null) None else trimmedGroup(m, 1)
+    }
+  }
+
+  private def anchored(re: String, leads: String*) = new Anchored(re, leads.toArray, cased = false)
 
   // Pattern SOURCE STRINGS are public: the oracle-gated column queries
   // (graft.queries.DocQueries) reuse the exact same regex text, so an
@@ -371,51 +649,53 @@ object Extract {
   val IcdPlainRe = "(?i)ICD-10\\s*Code\\(?s?\\)?\\s*:?\\s*([A-Z]\\d+\\.\\d+)"
   val IcdGenericRe = "([A-Z]\\d+\\.\\d+)"
 
-  private val patientName = p(PatientNameRe)
-  private val patientDob = p(PatientDobRe)
-  private val patientPhone = p(PatientPhoneRe)
-  private val dateTimeFull = p(DateTimeFullRe)
-  private val dateAnchored = p(DateAnchoredRe)
+  private val patientName = anchored(PatientNameRe, "mother", "patient")
+  private val patientDob = anchored(PatientDobRe, "dob", "date of birth")
+  private val patientPhone = anchored(PatientPhoneRe, "phone")
+  private val dateTimeFull = anchored(DateTimeFullRe, "date")
+  private val dateAnchored = anchored(DateAnchoredRe, "date", "fecha")
   private val dateBare = p(DateBareRe)
-  private val signedBy = p(SignedByRe)
+  private val signedBy = anchored(SignedByRe, "signed by customer", "firmado por el cliente")
   val excludedSignerPhrases: Vector[String] = Vector(
     "date", "signature", "customer", "n/a", "none", "x")
-  private val icdBullet = p(IcdBulletRe)
-  private val icdPlain = p(IcdPlainRe)
+  private val icdBullet = anchored(IcdBulletRe, "icd-10")
+  private val icdPlain = anchored(IcdPlainRe, "icd-10")
   private val icdGeneric = p(IcdGenericRe)
-  // R5 section-bounded checkbox items
-  private val necessitySection =
-    p("(?is)Section\\s+II\\.?\\s*Medical Necessity(.*?)(?:Section\\s+III|$)")
+  // R5 section-bounded checkbox items: the section is the text after
+  // (?is)Section\s+II\.?\s*Medical Necessity up to the first
+  // `Section\s+III` or the end (Java's non-MULTILINE `$`), i.e. the group
+  // of `...Medical Necessity(.*?)(?:Section\s+III|$)`
+  private val necessityHeader = anchored("(?i)Section\\s+II\\.?\\s*Medical Necessity", "section")
+  private val nextSection = anchored("(?i)Section\\s+III", "section")
   private val checkboxItem = p("(?m)^\\s*[X\\u2713]\\s*(\\d+)\\.\\s*([^\\n]+)")
   // R6 tabular tri-group — deliberately case-SENSITIVE: with (?i) the
   // negated class [^C] would also exclude lowercase 'c' ("Electric").
-  private val qtyTriGroup =
-    p("QTY\\s*(\\d+)\\s*([^C\\n]+?)\\s*Code\\s*(\\w+)")
-  private val lengthOfNeed = p("(?i)Length of Need\\s*:?\\s*(\\d+)")
+  private val qtyTriGroup = new Anchored(
+    "QTY\\s*(\\d+)\\s*([^C\\n]+?)\\s*Code\\s*(\\w+)", Array("QTY"), cased = true)
+  private val lengthOfNeed = anchored("(?i)Length of Need\\s*:?\\s*(\\d+)", "length of need")
   // R9 unanchored entity sweep (phone) — note Java handles the reference's
   // lazy `??` quantifier (data_extract_kailey.py:43) identically here.
   private val phoneSweep =
     p("(?:\\(\\d{3}\\)\\s*|\\b\\d{3}[-.\\s]?)\\d{3}[-.\\s]??\\d{4}\\b")
   // R10 keyword presence → canonical value (Ethan_PDFandJPG3.py:258-269)
   private val pumpPatterns = Vector(
-    "(?i)double\\s+electric\\s+breast\\s+pump",
-    "(?i)breast\\s+pump.{0,40}?double\\s+electric",
-    "(?i)E0603",
-    "(?i)pump\\s+depot").map(p)
-  // one necessary literal per pump pattern, in the same order — the bank
-  // probes `low.contains(guard)` before running the corresponding regex
-  private val pumpGuards = Vector("double", "breast", "e0603", "pump")
+    anchored("(?i)double\\s+electric\\s+breast\\s+pump", "double"),
+    anchored("(?i)breast\\s+pump.{0,40}?double\\s+electric", "breast"),
+    anchored("(?i)E0603", "e0603"),
+    anchored("(?i)pump\\s+depot", "pump"))
   // P9/P10 name helpers
-  private val physicianNpi =
-    p("(?i)Physicians?\\s*Name\\s*:\\s*([^\\n-]+?)\\s*(?:,\\s*MD)?\\s*-\\s*(\\d{6,10})")
+  private val physicianNpi = anchored(
+    "(?i)Physicians?\\s*Name\\s*:\\s*([^\\n-]+?)\\s*(?:,\\s*MD)?\\s*-\\s*(\\d{6,10})", "physician")
   private val memberNameId =
-    p("(?i)Member\\s*Name\\s+([A-Za-z .'-]+?)\\s+([A-Z]\\d{6,12})\\b")
+    anchored("(?i)Member\\s*Name\\s+([A-Za-z .'-]+?)\\s+([A-Z]\\d{6,12})\\b", "member")
 
   def firstMatch(pat: Pattern, text: String, group: Int = 1): Option[String] = {
     val m = pat.matcher(text)
-    if (m.find()) Option(m.group(group)).map(_.trim).filter(_.nonEmpty)
-    else None
+    if (m.find()) trimmedGroup(m, group) else None
   }
+
+  private def trimmedGroup(m: Matcher, group: Int): Option[String] =
+    Option(m.group(group)).map(_.trim).filter(_.nonEmpty)
 
   def allMatches(pat: Pattern, text: String): Vector[String] = {
     val m = pat.matcher(text)
@@ -452,44 +732,42 @@ object Extract {
     * every line (split(-1) keeps trailing empties, so the joined tail is
     * always a contiguous suffix of the input).
     */
-  def lastLines(text: String, n: Int): String = {
-    if (n <= 0) return ""
+  def lastLines(text: String, n: Int): String = text.substring(lastLinesStart(text, n))
+
+  /** Start offset of [[lastLines]]`(text, n)` in `text`. */
+  private def lastLinesStart(text: String, n: Int): Int = {
+    if (n <= 0) return text.length
     var count = 0
     var i = text.length - 1
     while (i >= 0) {
       if (text.charAt(i) == '\n') {
         count += 1
-        if (count == n) return text.substring(i + 1)
+        if (count == n) return i + 1
       }
       i -= 1
     }
-    text
+    0
   }
 
   // -------------------------------------------------------------------------
-  // Per-type field banks. Each returns fields in canonical-name space.
+  // Per-type field banks. Each returns fields in canonical-name space. The
+  // private (text, low) forms are the fused extractor's: `low` MUST be
+  // `text.toLowerCase`, the copy extractTurn already made for the
+  // classifier.
   // -------------------------------------------------------------------------
   def facesheetBank(text: String): Map[String, String] =
     facesheetBank(text, text.toLowerCase)
 
-  /** Guarded fast path: `low` MUST be `text.toLowerCase`. Each guard is a
-    * necessary condition of its pattern (a literal the regex cannot match
-    * without), so a skipped regex could never have matched — measured: the
-    * banks dominated the 47 us/turn extract cost, and most patterns lose
-    * their anchor literal on most turns of their doc type.
-    */
   private def facesheetBank(text: String, low: String): Map[String, String] = {
     val b = Map.newBuilder[String, String]
-    if (low.contains("name")) firstMatch(patientName, text).foreach { v =>
+    patientName.first(text, low).foreach { v =>
       b += "patient_name" -> v
       val (f, l) = splitName(v)
       b += "patient_first_name" -> f
       b += "patient_last_name" -> l
     }
-    if (low.contains("dob") || low.contains("date of birth"))
-      firstMatch(patientDob, text).foreach(b += "patient_dob" -> _)
-    if (low.contains("phone"))
-      firstMatch(patientPhone, text).foreach(b += "patient_phone" -> _)
+    patientDob.first(text, low).foreach(b += "patient_dob" -> _)
+    patientPhone.first(text, low).foreach(b += "patient_phone" -> _)
     b.result()
   }
 
@@ -498,58 +776,71 @@ object Extract {
 
   private def prescriptionBank(text: String, low: String): Map[String, String] = {
     val b = Map.newBuilder[String, String]
-    if (low.contains("name"))
-      firstMatch(patientName, text).foreach(b += "patient_name" -> _)
-    if (low.contains("dob") || low.contains("date of birth"))
-      firstMatch(patientDob, text).foreach(b += "patient_dob" -> _)
+    patientName.first(text, low).foreach(b += "patient_name" -> _)
+    patientDob.first(text, low).foreach(b += "patient_dob" -> _)
+    // icdBullet and icdPlain share the leading literal; the bullet regex
+    // also needs one of its bullet characters after it
+    val icdAt = icdPlain.start(text, low, 0)
     val icd =
-      (if (low.contains("icd-10"))
-        firstMatch(icdBullet, text).orElse(firstMatch(icdPlain, text))
-      else None).orElse(firstMatch(icdGeneric, text))
+      (if (icdAt < 0) None
+      else (if (hasBullet(text, icdAt)) icdBullet.first(text, low, icdAt) else None)
+        .orElse(icdPlain.first(text, low, icdAt)))
+        .orElse(firstMatch(icdGeneric, text))
     icd.foreach(b += "icd10" -> _)
-    if (low.contains("medical necessity")) {
-      val items = checkboxItems(text)
-      if (items.nonEmpty) b += "necessity_items" -> items.mkString("; ")
+    val items = checkboxItems(text, low)
+    if (items.nonEmpty) b += "necessity_items" -> items.mkString("; ")
+    val tri = qtyTriGroup.find(text, low)
+    if (tri != null) {
+      b += "qty" -> tri.group(1).trim
+      b += "item_description" -> tri.group(2).trim
+      b += "item_code" -> tri.group(3).trim
     }
-    if (text.contains("QTY")) { // qtyTriGroup is deliberately case-sensitive
-      val tri = qtyTriGroup.matcher(text)
-      if (tri.find()) {
-        b += "qty" -> tri.group(1).trim
-        b += "item_description" -> tri.group(2).trim
-        b += "item_code" -> tri.group(3).trim
-      }
-    }
-    if (low.contains("length of need"))
-      firstMatch(lengthOfNeed, text).foreach(b += "length_of_need" -> _)
-    if (pumpPatterns.zip(pumpGuards).exists { case (pt, g) =>
-        low.contains(g) && pt.matcher(text).find() })
+    lengthOfNeed.first(text, low).foreach(b += "length_of_need" -> _)
+    if (pumpPatterns.exists(_.find(text, low) != null))
       b += "pump_type" -> "Double Electric Breast Pump"
-    if (low.contains("physician")) {
-      val phys = physicianNpi.matcher(text)
-      if (phys.find()) {
-        b += "physician_name" -> phys.group(1).trim
-        b += "physician_npi" -> phys.group(2).trim
-      }
+    val phys = physicianNpi.find(text, low)
+    if (phys != null) {
+      b += "physician_name" -> phys.group(1).trim
+      b += "physician_npi" -> phys.group(2).trim
     }
     b.result()
   }
 
+  /** One of IcdBulletRe's bullet characters occurs in text(from ...). */
+  private def hasBullet(text: String, from: Int): Boolean = {
+    var i = from
+    while (i < text.length) {
+      val c = text.charAt(i)
+      if (c >= '\u2022' && isBullet(c)) return true
+      i += 1
+    }
+    false
+  }
+
+  private def isBullet(c: Char): Boolean = (c: @annotation.switch) match {
+    case '\u2022' | '\u2756' | '\u2605' | '\u2726' | '\u25CF' | '\u25A0' | '\u25AA' => true
+    case _ => false
+  }
+
   def agreementBank(text: String): Map[String, String] = {
-    // Reference applies the agreement bank to the last-15-lines window
-    // (SignedAgreementFinalDB:146-148).
     val tail = lastLines(text, 15)
-    val tailLow = tail.toLowerCase
+    agreementBank(tail, tail.toLowerCase)
+  }
+
+  /** Reference applies the agreement bank to the last-15-lines window
+    * (SignedAgreementFinalDB:146-148). No agreement pattern looks behind
+    * its start or has an anchor, so the first match in the window is the
+    * first match in `text` starting at the window's offset.
+    */
+  private def agreementBank(text: String, low: String): Map[String, String] = {
+    val from = lastLinesStart(text, 15)
     val b = Map.newBuilder[String, String]
-    if (tailLow.contains("signed by customer") ||
-        tailLow.contains("firmado por el cliente"))
-      firstMatch(signedBy, tail).filter(validName).foreach { v =>
-        b += "signed_by" -> v
-      }
-    val anchoredDate =
-      if (tailLow.contains("date") || tailLow.contains("fecha"))
-        firstMatch(dateTimeFull, tail).orElse(firstMatch(dateAnchored, tail))
-      else None
-    anchoredDate.orElse(firstMatch(dateBare, tail))
+    signedBy.first(text, low, from).filter(validName).foreach { v =>
+      b += "signed_by" -> v
+    }
+    dateTimeFull.first(text, low, from)
+      .orElse(dateAnchored.first(text, low, from))
+      .orElse { val m = dateBare.matcher(text); if (m.find(from)) trimmedGroup(m, 1) else None }
       .foreach(b += "signed_date" -> _)
     b.result()
   }
@@ -559,12 +850,10 @@ object Extract {
 
   private def insuranceBank(text: String, low: String): Map[String, String] = {
     val b = Map.newBuilder[String, String]
-    if (low.contains("member")) {
-      val m = memberNameId.matcher(text)
-      if (m.find()) {
-        b += "member_name" -> m.group(1).trim
-        b += "member_id" -> m.group(2).trim
-      }
+    val m = memberNameId.find(text, low)
+    if (m != null) {
+      b += "member_name" -> m.group(1).trim
+      b += "member_id" -> m.group(2).trim
     }
     b.result()
   }
@@ -576,12 +865,60 @@ object Extract {
     * checked item texts inside the Medical Necessity section only.
     */
   def checkboxItems(text: String): Vector[String] =
-    firstMatch(necessitySection, text).map { sec =>
-      val m = checkboxItem.matcher(sec)
-      val items = Vector.newBuilder[String]
-      while (m.find()) items += m.group(2).trim
-      items.result()
-    }.getOrElse(Vector.empty)
+    checkboxItems(text, text.toLowerCase)
+
+  private def checkboxItems(text: String, low: String): Vector[String] = {
+    val head = necessityHeader.find(text, low)
+    if (head == null) return Vector.empty
+    val body = head.end
+    val next = nextSection.find(text, low, body)
+    val end = math.min(if (next == null) text.length else next.start, dollarFrom(text, body))
+    val sec = text.substring(body, end).trim
+    // checkboxItem's matches start at a line start (its MULTILINE `^`), so
+    // only line starts are tried, in order, as `find()` would
+    val m = checkboxItem.matcher(sec)
+    val items = Vector.newBuilder[String]
+    var i = lineStart(sec, 0)
+    while (i >= 0) {
+      if (m.region(i, sec.length).lookingAt()) {
+        items += m.group(2).trim
+        i = lineStart(sec, m.end)
+      } else i = lineStart(sec, i + 1)
+    }
+    items.result()
+  }
+
+  /** The first index at or after `from` where Java's MULTILINE `^`
+    * matches: the start, or after a line terminator other than the '\r' of
+    * a "\r\n", but never at the end.
+    */
+  private def lineStart(s: String, from: Int): Int = {
+    var i = from
+    while (i < s.length) {
+      if (i == 0) return 0
+      val c = s.charAt(i - 1)
+      if ((c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029') &&
+          !(c == '\r' && s.charAt(i) == '\n')) return i
+      i += 1
+    }
+    -1
+  }
+
+  /** The first index at or after `from` where Java's non-MULTILINE `$`
+    * matches: before a final "\r\n", before a final line terminator other
+    * than the '\n' of a "\r\n", or at the end.
+    */
+  private def dollarFrom(s: String, from: Int): Int = {
+    val n = s.length
+    def terminator(i: Int): Boolean = s.charAt(i) match {
+      case '\n' => i == 0 || s.charAt(i - 1) != '\r'
+      case '\r' | '\u0085' | '\u2028' | '\u2029' => true
+      case _ => false
+    }
+    if (from <= n - 2 && s.charAt(n - 2) == '\r' && s.charAt(n - 1) == '\n') n - 2
+    else if (from <= n - 1 && terminator(n - 1)) n - 1
+    else n
+  }
 
   // -------------------------------------------------------------------------
   // Query-driven dynamic extraction — the reference's primary mechanism:
@@ -1160,7 +1497,7 @@ object Extract {
       val stripped = extractText(text)
       val sections = segment(stripped)
       // one lowercase copy per turn, shared by the classifier, the
-      // signature detector, and the bank pattern guards
+      // signature detector, and the banks' leading-literal search
       val low = stripped.toLowerCase
       val docType = classifyLow(low)
       val anchors = kvAnchors(stripped).toMap
@@ -1170,7 +1507,7 @@ object Extract {
       val bank =
         if (docType == "FACESHEET") facesheetBank(stripped, low)
         else if (docType.contains("PRESCRIPTION")) prescriptionBank(stripped, low)
-        else if (docType.contains("AGREEMENT")) agreementBank(stripped)
+        else if (docType.contains("AGREEMENT")) agreementBank(stripped, low)
         else if (docType == "INSURANCE") insuranceBank(stripped, low)
         else Map.empty[String, String]
       // Merge precedence: pattern-bank result beats KV anchor (§3.3).

@@ -167,6 +167,46 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("conv_id", "turn_idx", "role", "text", "tool", "ts"))
   }
 
+  test("fixed-schema reads: a written table reads as before, and a run costs two Spark jobs") {
+    val dir = tmpDir(); val out = tmpDir()
+    val snap = TranscriptsTable.appendSnapshot(spark, dir, 1, 0, 8, 16, buckets = 2)
+    // the table as the writer leaves it, read the way it was read before the
+    // schema was fixed: inferred from the parquet footers
+    val inferred = spark.read.parquet(snap.path).drop("bucket")
+    val rows = inferred.collect().toSet
+    for (read <- Seq(TranscriptsTable.readSnapshot(spark, snap), TranscriptsTable.readAll(spark, dir))) {
+      assert(read.schema == inferred.schema)
+      assert(read.collect().toSet == rows)
+    }
+
+    // jobs of one ExtractJob.run, counted by job group; listener events
+    // arrive in order, so once the marker job is seen every run job was
+    val sc = spark.sparkContext
+    val group = s"graft-run-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one extract run")
+      assert(ExtractJob.run(spark, ExtractJob.Config(dir, out)).map(_._1) == Seq(1L))
+      sc.setJobGroup(marker, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(marker), "listener never saw the marker job")
+      // the results write and the lineage write; no footer-inference job
+      val jobs = groups.toArray.count(_ == group)
+      assert(jobs == 2, s"one run of one snapshot launched $jobs Spark jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("resume: completed snapshots are skipped; no duplicated or lost turns") {
     val dir = tmpDir(); val out = tmpDir()
     TranscriptsTable.appendSnapshot(spark, dir, 1, 0, 10, 32, buckets = 2)

@@ -101,6 +101,27 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** A page of 20,000 unclosed `opener`s, each followed by a word. */
+  private def unclosedPage(lead: String, opener: String): Gen[String] = for {
+    words <- Gen.listOfN(20000, Gen.oneOf("alpha", "bravo", "kilo", "tango", "echo delta"))
+    upper <- Gen.prob(0.5)
+  } yield lead + words.map(w => (if (upper) opener.toUpperCase else opener) + w + " ").mkString
+
+  test("adversarial HTML: 20k unclosed <nav>, <a href=x> or <script> openers cost linear time") {
+    // The regex block cascade scanned to the end of the page once per
+    // unclosed opener: 16 s (<nav>), 53 s (<a href=x>) and 31 s (<script>)
+    // per page on a 4-core x86 host, JDK 17; the linear pass takes 4-6 ms.
+    for ((lead, opener) <- Seq(("<html><body>", "<nav>"), ("<div>", "<a href=x>"),
+        ("<p>", "<script>")); i <- 1 to 3;
+        page <- unclosedPage(lead, opener).apply(Gen.Parameters.default, Seed(i.toLong))) {
+      val t0 = System.nanoTime()
+      val e = Extract.extractTurn("c", 0, page)
+      val s = (System.nanoTime() - t0) / 1e9
+      assert(e.status == "ok")
+      assert(s < 1.0, f"$opener page of ${page.length} chars took $s%.2f s")
+    }
+  }
+
   test("extraction is order-independent: any permutation yields the same row set") {
     val turns = TranscriptGen.turns(10, 16).toVector
     val base = turns.map(t => Extract.extractTurn(t.conv_id, t.turn_idx, t.text)).toSet

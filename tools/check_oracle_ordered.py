@@ -1,60 +1,12 @@
 #!/usr/bin/env python3
-"""Order-sensitive variant of tools/check_oracle.py: compares the exact
-row sequence of the Spark parquet (file-order) against the oracle SQL's
-ORDER BY output. Columns still aligned by name."""
-import json
+"""Order-sensitive oracle check: `check_oracle.py --ordered`, with the same
+arguments and defaults. Row order is only defined by a total ORDER BY on the
+oracle's outermost query; check_oracle.py says how oracles without one, and
+rows tied on the ORDER BY keys, are compared."""
+import runpy
 import sys
-
-import duckdb
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
-
-def norm(v):
-    if isinstance(v, float):
-        return round(v, 9)
-    if isinstance(v, list):
-        return tuple(norm(x) for x in v)
-    return v
-
-
-def rows_of(rel):
-    cols = rel.columns
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    data = [tuple(norm(r[i]) for i in order) for r in rel.fetchall()]
-    return [cols[i] for i in order], data
-
-
-def main(sf_dir, out_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = 0
-    for name, sql in sorted(oracle.items()):
-        try:
-            got_cols, got = rows_of(con.sql(
-                f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')"))
-            want_cols, want = rows_of(con.sql(sql))
-        except Exception as e:
-            print(f"FAIL {name}: exception {e}")
-            n_fail += 1
-            continue
-        if got_cols != want_cols:
-            print(f"FAIL {name}: columns spark={got_cols} oracle={want_cols}")
-            n_fail += 1
-        elif got != want:
-            diffs = [(i, a, b) for i, (a, b) in enumerate(zip(got, want)) if a != b]
-            print(f"FAIL {name}: {len(got)} vs {len(want)} rows, "
-                  f"first order-diffs: {diffs[:2]}")
-            n_fail += 1
-        else:
-            n_pass += 1
-    print(f"== ORDERED: {n_pass} pass, {n_fail} fail ==")
-    return 1 if n_fail else 0
-
+from pathlib import Path
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.argv.insert(1, "--ordered")
+    runpy.run_path(str(Path(__file__).with_name("check_oracle.py")), run_name="__main__")
