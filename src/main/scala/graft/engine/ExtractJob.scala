@@ -1,6 +1,11 @@
 package graft.engine
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -49,7 +54,8 @@ final case class ResultRow(
   *  - Lineage is collected DURING the write (a [[LineageAccumulator]]
   *    registered per extract task at iterator exhaustion) — the output is
   *    never re-scanned. At 100 TB the alternative (a second job over the
-  *    written results) re-reads the entire output for KB of counters.
+  *    written results) re-reads the entire output for KB of counters. The
+  *    driver writes those KB itself, so a snapshot commits with one job.
   */
 object ExtractJob {
 
@@ -94,17 +100,73 @@ object ExtractJob {
       input_files: Seq[String], turn_count: Long, ok_count: Long,
       fail_count: Long)
 
-  /** Accumulated stats → the lineage table, driver-local (KB scale).
-    * Empty partitions are dropped to match [[lineage]]'s groupBy shape.
+  /** Accumulated stats → lineage rows, ordered by partition id. Empty
+    * partitions are dropped to match [[lineage]]'s groupBy shape.
     */
+  def lineageRows(stats: Map[Int, PartitionLineage], runId: String,
+      snapshotId: Long): Seq[LineageRow] =
+    stats.values.filter(_.turnCount > 0).toSeq.sortBy(_.partitionId)
+      .map(s => LineageRow(runId, snapshotId, s.partitionId, s.inputFiles,
+        s.turnCount, s.okCount, s.failCount))
+
+  /** [[lineageRows]] as a DataFrame, driver-local (KB scale). */
   def lineageFromStats(spark: SparkSession,
       stats: Map[Int, PartitionLineage], runId: String,
       snapshotId: Long): DataFrame = {
     import spark.implicits._
-    stats.values.filter(_.turnCount > 0).toSeq.sortBy(_.partitionId)
-      .map(s => LineageRow(runId, snapshotId, s.partitionId, s.inputFiles,
-        s.turnCount, s.okCount, s.failCount))
-      .toDS().toDF()
+    lineageRows(stats, runId, snapshotId).toDS().toDF()
+  }
+
+  /** [[LineageRow]]'s parquet type, as Spark writes it for the case
+    * class: `spark.read.parquet` reads the same schema from either.
+    */
+  private val LineageParquetType = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary run_id (STRING);
+      |  required int64 snapshot_id;
+      |  required int32 partition_id;
+      |  optional group input_files (LIST) {
+      |    repeated group list { optional binary element (STRING); }
+      |  }
+      |  required int64 turn_count;
+      |  required int64 ok_count;
+      |  required int64 fail_count;
+      |}""".stripMargin)
+
+  /** Write one snapshot's lineage rows from the driver as the single snappy
+    * parquet file of `lineage/snapshot=<id>`, replacing what is there. The
+    * file is written into a staging directory that a replay deletes first,
+    * then renamed into place; its name starts with '_' and has no '=', so
+    * Spark's file listing skips it (a '_' name with '=' is a partition).
+    */
+  private def writeLineage(spark: SparkSession, outDir: String,
+      snapshotId: Long, rows: Seq[LineageRow]): Unit = {
+    val dir = Paths.get(s"$outDir/lineage/snapshot=$snapshotId")
+    val tmp = dir.resolveSibling(s"_snapshot-$snapshotId.tmp")
+    if (Files.exists(tmp)) Maintenance.deleteRecursively(tmp)
+    Files.createDirectories(tmp)
+    val w = ExampleParquetWriter
+      .builder(new LocalOutputFile(tmp.resolve("part-00000.snappy.parquet")))
+      .withType(LineageParquetType)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      // the session's Hadoop settings, as Spark's own writer uses; a fresh
+      // Configuration re-parses its resources (~10 ms a snapshot)
+      .withConf(spark.sessionState.newHadoopConf())
+      .build()
+    try rows.foreach { r =>
+      val g = new SimpleGroup(LineageParquetType)
+      g.add("run_id", r.run_id)
+      g.add("snapshot_id", r.snapshot_id)
+      g.add("partition_id", r.partition_id)
+      val files = g.addGroup("input_files")
+      r.input_files.foreach(f => files.addGroup("list").add("element", f))
+      g.add("turn_count", r.turn_count)
+      g.add("ok_count", r.ok_count)
+      g.add("fail_count", r.fail_count)
+      w.write(g)
+    } finally w.close()
+    if (Files.exists(dir)) Maintenance.deleteRecursively(dir)
+    Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Schemas for recovering typed columns from the JSON sink form:
@@ -228,25 +290,25 @@ object ExtractJob {
     val dir = Paths.get(s"$outDir/_commits")
     if (!Files.exists(dir)) Set.empty
     else {
+      // matches the whole name: a leftover `snapshot-N.done.tmp` is no commit
       val re = """snapshot-(\d+)\.done""".r
       import scala.jdk.CollectionConverters._
       val stream = Files.list(dir)
       try
-        stream.iterator().asScala.flatMap { p =>
-          re.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toLong)
-        }.toSet
+        stream.iterator().asScala.map(_.getFileName.toString)
+          .collect { case re(id) => id.toLong }.toSet
       finally stream.close()
     }
   }
 
   /** Process one snapshot: extract → write results (lineage accumulated
-    * in the same job) → write lineage → atomic commit marker. Output
-    * paths are snapshot-scoped and written with overwrite, so a retry
-    * after a crash before the marker is idempotent (exactly-once per
-    * snapshot without ACID tables). The whole snapshot costs ONE pass
-    * over the input — lineage and the committed-turn count come from the
-    * [[LineageAccumulator]] filled by the write job's own tasks, not a
-    * second scan of the output.
+    * in the same job) → write lineage from the driver → atomic commit
+    * marker. Output paths are snapshot-scoped and replaced on write, so a
+    * retry after a crash before the marker is idempotent (exactly-once per
+    * snapshot without ACID tables). The whole snapshot costs one Spark
+    * job — lineage and the committed-turn count come from the
+    * [[LineageAccumulator]] filled by the write job's own tasks, and the
+    * KB-scale lineage file is written by the driver ([[writeLineage]]).
     */
   def runSnapshot(spark: SparkSession, cfg: Config,
       snap: TranscriptsTable.SnapshotRef): Long = {
@@ -276,8 +338,7 @@ object ExtractJob {
       if (j.staged) Sinks.mirrorToJdbcStaged(withSnap, j, snap.id)
       else Sinks.mirrorToJdbc(withSnap, j)
     }
-    lineageFromStats(spark, stats, cfg.runId, snap.id)
-      .write.mode("overwrite").parquet(s"${cfg.outDir}/lineage/snapshot=${snap.id}")
+    writeLineage(spark, cfg.outDir, snap.id, lineageRows(stats, cfg.runId, snap.id))
     val n = stats.valuesIterator.map(_.turnCount).sum
     // temp+rename commit record — the resume checkpoint
     val marker = commitMarker(cfg.outDir, snap.id)

@@ -129,7 +129,7 @@ object Maintenance {
     removed.toSeq.sorted
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  private[engine] def deleteRecursively(p: java.nio.file.Path): Unit = {
     if (Files.isDirectory(p)) {
       val st = Files.list(p)
       try st.iterator().forEachRemaining(deleteRecursively)

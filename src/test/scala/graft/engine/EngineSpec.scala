@@ -1,6 +1,7 @@
 package graft.engine
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -30,6 +31,27 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       sig: Boolean, conf: Double, status: String): String =
     Seq(convId, turnIdx, docType, text, sectionsJson, fieldsJson,
       sig, conf, status).mkString("|#|")
+
+  private def list(dir: Path): Seq[Path] = {
+    val st = Files.list(dir)
+    try st.iterator().asScala.toVector finally st.close()
+  }
+
+  /** One snapshot of generator turns with every fifth text emptied, so the
+    * extractor quarantines those turns as `failed:empty`; written sorted
+    * within each file, as the presorted path of [[ExtractJob.runSnapshot]]
+    * expects.
+    */
+  private def plantedFailures(dir: String): TranscriptsTable.SnapshotRef = {
+    import spark.implicits._
+    val path = s"$dir/snapshot=1"
+    TranscriptGen.turns(20, 32).zipWithIndex
+      .map { case (t, i) => if (i % 5 == 0) t.copy(text = "") else t }
+      .toSeq.toDS()
+      .repartition(2, $"conv_id").sortWithinPartitions("conv_id", "turn_idx")
+      .write.parquet(path)
+    TranscriptsTable.SnapshotRef(1, path, 20, 0)
+  }
 
   private def oracleRows(nConvs: Int, giant: Int): Vector[String] =
     TranscriptGen.turns(nConvs, giant)
@@ -167,7 +189,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("conv_id", "turn_idx", "role", "text", "tool", "ts"))
   }
 
-  test("fixed-schema reads: a written table reads as before, and a run costs two Spark jobs") {
+  test("fixed-schema reads: a written table reads as before, and a run costs one Spark job") {
     val dir = tmpDir(); val out = tmpDir()
     val snap = TranscriptsTable.appendSnapshot(spark, dir, 1, 0, 8, 16, buckets = 2)
     // the table as the writer leaves it, read the way it was read before the
@@ -198,13 +220,94 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
       while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
       assert(groups.contains(marker), "listener never saw the marker job")
-      // the results write and the lineage write; no footer-inference job
+      // the results write; the driver writes lineage, and no
+      // footer-inference job runs
       val jobs = groups.toArray.count(_ == group)
-      assert(jobs == 2, s"one run of one snapshot launched $jobs Spark jobs")
+      assert(jobs == 1, s"one run of one snapshot launched $jobs Spark jobs")
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("driver-written lineage reads back as the Spark-written table, schema and rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.sum
+    val stats = Map(
+      3 -> ExtractJob.PartitionLineage(3, Seq("b"), 2, 1, 1),
+      0 -> ExtractJob.PartitionLineage(0, Seq("a"), 1, 1, 0),
+      1 -> ExtractJob.PartitionLineage(1, Nil, 0, 0, 0))
+    assert(ExtractJob.lineageRows(stats, "r", 1).map(_.partition_id) == Seq(0, 3),
+      "empty partitions must be dropped and rows ordered by partition id")
+
+    val dir = tmpDir(); val out = tmpDir()
+    val snap = plantedFailures(dir)
+    val cfg = ExtractJob.Config(dir, out)
+    ExtractJob.runSnapshot(spark, cfg, snap)
+    // the same snapshot's stats, written by Spark's DataFrame writer
+    val acc = new ExtractJob.LineageAccumulator
+    spark.sparkContext.register(acc)
+    ExtractJob.extract(spark, TranscriptsTable.readSnapshot(spark, snap), salted = false, 4,
+      presorted = true, lineageAcc = Some(acc))
+      .write.format("noop").mode("overwrite").save()
+    val ref = s"$out-spark-written"
+    ExtractJob.lineageFromStats(spark, acc.value, cfg.runId, 1).write.parquet(ref)
+
+    val driver = spark.read.parquet(s"$out/lineage/snapshot=1")
+    val written = spark.read.parquet(ref)
+    assert(driver.schema == written.schema)
+    val rows = driver.orderBy("partition_id").collect().toSeq
+    assert(rows == written.orderBy("partition_id").collect().toSeq)
+    val (ok, fail) = driver.agg(sum("ok_count"), sum("fail_count")).as[(Long, Long)].head()
+    assert(ok > 0 && fail > 0, s"fixture must plant failures: ok=$ok fail=$fail")
+    assert(rows.size > 1 && rows.forall(_.getAs[Seq[String]]("input_files").nonEmpty))
+  }
+
+  test("lineage replay: a crash before the marker and a stale staging directory leave one exact file") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.sum
+    val dir = tmpDir(); val out = tmpDir()
+    TranscriptsTable.appendSnapshot(spark, dir, 1, 0, 10, 32, buckets = 2)
+    TranscriptsTable.appendSnapshot(spark, dir, 2, 10, 10, 32, buckets = 2)
+    val cfg = ExtractJob.Config(dir, out)
+    assert(ExtractJob.run(spark, cfg).map(_._1) == Seq(1L, 2L))
+    val lineage = Paths.get(out, "lineage")
+    def parquetFiles(p: Path) = list(p).filter(_.getFileName.toString.endsWith(".parquet"))
+    def rows(p: Path) = spark.read.parquet(p.toString).orderBy("partition_id").collect().toSeq
+    val before = rows(lineage.resolve("snapshot=1"))
+
+    // crash after the lineage write, before the marker; a staging directory
+    // of an earlier attempt still holds files (here: snapshot 2's rows)
+    Files.delete(ExtractJob.commitMarker(out, 1))
+    val stale = Files.createDirectories(lineage.resolve("_snapshot-1.tmp"))
+    val other = parquetFiles(lineage.resolve("snapshot=2")).head
+    for (name <- Seq("part-00000.snappy.parquet", "part-00001.snappy.parquet"))
+      Files.copy(other, stale.resolve(name))
+
+    assert(ExtractJob.run(spark, cfg).map(_._1) == Seq(1L))
+    assert(Files.exists(ExtractJob.commitMarker(out, 1)))
+    assert(parquetFiles(lineage.resolve("snapshot=1")).size == 1)
+    assert(rows(lineage.resolve("snapshot=1")) == before)
+    assert(list(lineage).map(_.getFileName.toString).toSet == Set("snapshot=1", "snapshot=2"),
+      "a staging directory was left behind")
+    val all = spark.read.parquet(s"$out/lineage")
+    assert(all.select("snapshot_id").distinct().as[Long].collect().toSet == Set(1L, 2L))
+    assert(all.agg(sum("turn_count")).as[Long].head() ==
+      TranscriptGen.totalTurns(20, 32))
+  }
+
+  test("resume: a leftover commit-marker temp file is not a commit") {
+    val dir = tmpDir(); val out = tmpDir()
+    TranscriptsTable.appendSnapshot(spark, dir, 1, 0, 5, 8, buckets = 2)
+    // a crash between the marker's temp write and its atomic move
+    val marker = ExtractJob.commitMarker(out, 1)
+    val tmp = Paths.get(marker.toString + ".tmp")
+    Files.createDirectories(marker.getParent)
+    Files.writeString(tmp, """{"snapshot":1,"turns":0}""")
+    assert(ExtractJob.committedSnapshots(out).isEmpty)
+    assert(ExtractJob.run(spark, ExtractJob.Config(dir, out)).map(_._1) == Seq(1L))
+    assert(Files.exists(marker) && !Files.exists(tmp))
+    assert(ExtractJob.committedSnapshots(out) == Set(1L))
   }
 
   test("resume: completed snapshots are skipped; no duplicated or lost turns") {
